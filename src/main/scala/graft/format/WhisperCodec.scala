@@ -138,8 +138,11 @@ object WhisperCodec {
 
   /**
    * Decode `count` 12-byte points from `buf` starting at `bufOffset`, assigning
-   * ring positions `posStart until posStart+count`. Zero-allocation-per-point
-   * callback form used by the connector's PartitionReader.
+   * ring positions `posStart until posStart+count`. The boxed convenience
+   * form, for tests and the benchmark harness: a `Function3` is not
+   * specialised, so every call boxes its two longs and its double. The scan
+   * does not call it; it decodes with the primitive kernel in
+   * `graft.sources.whisper.WhisperDecode`.
    */
   def foreachPoint(
       buf: Array[Byte],

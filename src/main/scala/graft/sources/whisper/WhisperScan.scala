@@ -1,12 +1,9 @@
 package graft.sources.whisper
 
-import java.util.zip.GZIPInputStream
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions => ExpressionsV2, SortDirection => SortDirectionV2, SortOrder => SortOrderV2}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
@@ -37,7 +34,11 @@ import graft.format.WhisperCodec
  *  - `timeSort=true` restores chronological order WITHOUT a shuffle: a
  *    well-formed ring buffer is at most 2 ascending runs
  *    (`whisper_pandas.py:231-232` does a full pandas sort instead), so the
- *    reader emits the rotation; a full per-partition sort is only a fallback.
+ *    reader emits the rotation; a full per-partition sort is only a fallback;
+ *  - both readers share one decode kernel ([[WhisperDecode]]): one primitive
+ *    pass over the read buffer, no per-point callback or row copy; the
+ *    columnar reader fills its vectors straight from the buffer and the row
+ *    reader (the streaming tail) is a row view of the same batches.
  */
 final case class WhisperInputPartition(
     filePath: String,
@@ -70,33 +71,33 @@ final case class WhisperMultiPartition(units: Array[WhisperInputPartition]) exte
 sealed trait WPred extends Serializable {
   def eval(file: String, archive: Int, pos: Long, ts: Long, value: Double): Boolean
 }
-final case class NumCmp(col: String, op: String, v: Long) extends WPred {
-  private def pick(archive: Int, pos: Long, ts: Long): Long = col match {
-    case "archive"  => archive.toLong
-    case "position" => pos
-    case _          => ts
-  }
-  def eval(file: String, archive: Int, pos: Long, ts: Long, value: Double): Boolean = {
-    val x = pick(archive, pos, ts)
-    op match {
-      case "="  => x == v
-      case "!=" => x != v
-      case ">"  => x > v
-      case ">=" => x >= v
-      case "<"  => x < v
-      case "<=" => x <= v
-    }
+/** A pushed comparison on one numeric column. The column is resolved once,
+ * at construction, so the per-point test (`keeps`) matches no strings. */
+sealed abstract class NumPred(col: String) extends WPred {
+  private val colId = Seq("archive", "position").indexOf(col) // -1: timestamp
+  /** An archive predicate: decided once per partition, never per point. */
+  def onArchive: Boolean = colId == 0
+  protected def test(x: Long): Boolean
+  /** The per-point form, for position and timestamp predicates. */
+  final def keeps(pos: Long, ts: Long): Boolean = test(if (colId == 1) pos else ts)
+  final def eval(file: String, archive: Int, pos: Long, ts: Long, value: Double): Boolean =
+    if (colId == 0) test(archive.toLong) else keeps(pos, ts)
+}
+final case class NumCmp(col: String, op: String, v: Long) extends NumPred(col) {
+  private val opId = Seq("=", "!=", ">", ">=", "<", "<=").indexOf(op)
+  require(opId >= 0, s"unsupported comparison: $op")
+  protected def test(x: Long): Boolean = (opId: @scala.annotation.switch) match {
+    case 0 => x == v
+    case 1 => x != v
+    case 2 => x > v
+    case 3 => x >= v
+    case 4 => x < v
+    case _ => x <= v
   }
 }
-final case class NumIn(col: String, vs: Set[Long]) extends WPred {
-  def eval(file: String, archive: Int, pos: Long, ts: Long, value: Double): Boolean = {
-    val x = col match {
-      case "archive"  => archive.toLong
-      case "position" => pos
-      case _          => ts
-    }
-    vs.contains(x)
-  }
+final case class NumIn(col: String, vs: Set[Long]) extends NumPred(col) {
+  private val sorted = vs.toArray.sorted
+  protected def test(x: Long): Boolean = java.util.Arrays.binarySearch(sorted, x) >= 0
 }
 /** Trivially-true marker for filters we accept without reader-side work
  * (IsNotNull on an all-non-nullable schema); stripped before the decode loop. */
@@ -317,9 +318,9 @@ private[whisper] object WhisperPlanning {
   /** Plan-time pruning: archive/file predicates decide whole partitions. */
   def partitionSurvives(preds: Seq[WPred], file: String, archive: Int): Boolean =
     preds.forall {
-      case p @ (NumCmp("archive", _, _) | NumIn("archive", _)) => p.eval(file, archive, 0, 0, 0)
-      case p @ (FileCmp(_, _) | FileIn(_))                     => p.eval(file, archive, 0, 0, 0)
-      case _                                                   => true
+      case p: NumPred                      => !p.onArchive || p.eval(file, archive, 0, 0, 0)
+      case p @ (FileCmp(_, _) | FileIn(_)) => p.eval(file, archive, 0, 0, 0)
+      case _                               => true
     }
 
   /** Default header source for batch planning: the manifest when the
@@ -708,194 +709,9 @@ class WhisperSequentialReader[T](
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
 
-/** Shared partition decode: byte-range read -> filtered primitive arrays +
- * emission order (ring rotation or sort fallback). */
-private[whisper] object WhisperDecode {
-  final case class Decoded(
-      positions: Array[Long],
-      timestamps: Array[Long],
-      values: Array[Double],
-      order: Array[Int],
-      nRows: Int
-  )
-
-  def load(
-      part: WhisperInputPartition,
-      options: WhisperOptions,
-      preds: Seq[WPred],
-      enforceWindows: Boolean = false): Decoded = {
-    val p = new HPath(part.filePath)
-    val fs = p.getFileSystem(WhisperIO.hadoopConf())
-    val raw =
-      try fs.open(p)
-      catch {
-        // Under manifestListing the plan's file list can outlive the store's
-        // (a file deleted after the manifest was written): scan it as EMPTY —
-        // exactly the rows a post-deletion walk-based plan would produce —
-        // instead of failing a 100 TB query over one vanished metric. The
-        // walk-based plan keeps failing loudly (its file list was just
-        // observed, so FileNotFound there means something is truly wrong).
-        case _: java.io.FileNotFoundException if options.manifestListing =>
-          return Decoded(Array.empty, Array.empty, Array.empty, Array.empty, 0)
-      }
-    try {
-      if (part.gzip) loadGzipStreaming(raw, part, options, preds, enforceWindows)
-      else loadRanged(raw, part, options, preds, enforceWindows)
-    } finally raw.close()
-  }
-
-  /** The ordered-chunk claim, verified: when the sort elision removed a
-   * global sort on the strength of this chunk's planned window, every kept
-   * row must actually fall inside it. A violation means the ring carries
-   * stale out-of-era residue (sparse writes across a wrap) — the archive is
-   * not a rotated sorted array and its chunks cannot be ordered by
-   * concatenation, so fail loudly rather than emit misordered rows. */
-  private def checkWindow(part: WhisperInputPartition, pos: Long, ts: Long): Unit =
-    if (ts < part.winLo || ts >= part.winHi)
-      throw new IllegalStateException(
-        s"whisper ring violates the dense-rotation invariant: slot $pos ts $ts outside the " +
-          s"planned chunk window [${part.winLo}, ${part.winHi}) in ${part.filePath} " +
-          s"archive ${part.archiveIndex}. The archive holds out-of-era residue (sparsely " +
-          "written ring), so its chunks cannot be emitted pre-ordered for the global-sort " +
-          "elision. Retry with option orderedSplit=false to scan it as one ordered partition.")
-
-  /** Plain files: one ranged read per split. The planner caps splits at
-   * maxPointsPerSplit / Int.MaxValue bytes, so the buffer always fits. */
-  private def loadRanged(
-      raw: org.apache.hadoop.fs.FSDataInputStream,
-      part: WhisperInputPartition,
-      options: WhisperOptions,
-      preds: Seq[WPred],
-      enforceWindows: Boolean): Decoded = {
-    val byteStart = part.archiveOffset + part.posStart * WhisperCodec.PointSize
-    val byteLen = part.posCount * WhisperCodec.PointSize
-    require(byteLen <= Int.MaxValue, s"split too large: $byteLen bytes; lower maxPointsPerSplit")
-    val buf = new Array[Byte](byteLen.toInt)
-    var got = 0
-    try {
-      raw.seek(byteStart)
-      got = WhisperCodec.readFully(raw, buf, buf.length)
-    } catch {
-      case _: java.io.EOFException => // truncated: keep what we read
-    }
-    val nPoints = got / WhisperCodec.PointSize
-    val positions = new Array[Long](nPoints)
-    val timestamps = new Array[Long](nPoints)
-    val values = new Array[Double](nPoints)
-    var n = 0
-    WhisperCodec.foreachPoint(buf, 0, nPoints, part.posStart) { (pos, ts, v) =>
-      val keep = (!options.dropTimeZero || ts != 0L) &&
-        preds.forall(_.eval(part.filePath, part.archiveIndex, pos, ts, v))
-      if (keep) {
-        if (enforceWindows) checkWindow(part, pos, ts)
-        positions(n) = pos
-        timestamps(n) = ts
-        values(n) = v
-        n += 1
-      }
-    }
-    Decoded(positions, timestamps, values, buildOrder(options, timestamps, n), n)
-  }
-
-  /** Gzip archives are non-splittable (one partition spans the whole
-   * archive) and therefore must NOT be buffered whole: a >2 GiB decompressed
-   * region would exceed the JVM array limit. Decode the stream in bounded
-   * chunks into growable filtered builders — memory scales with the rows
-   * KEPT, not the archive's decompressed size. Only a kept-row count beyond
-   * the array limit is a hard error (and says so explicitly). */
-  private def loadGzipStreaming(
-      raw: org.apache.hadoop.fs.FSDataInputStream,
-      part: WhisperInputPartition,
-      options: WhisperOptions,
-      preds: Seq[WPred],
-      enforceWindows: Boolean): Decoded = {
-    val gin = new GZIPInputStream(raw, 1 << 16)
-    var toSkip = part.archiveOffset + part.posStart * WhisperCodec.PointSize
-    while (toSkip > 0) {
-      val s = gin.skip(toSkip)
-      if (s <= 0) toSkip = 0 else toSkip -= s
-    }
-    val chunkPts = math.min(part.posCount, 1L << 20).toInt // <= 12 MiB buffer
-    val buf = new Array[Byte](chunkPts * WhisperCodec.PointSize)
-    val posB = scala.collection.mutable.ArrayBuilder.make[Long]
-    val tsB = scala.collection.mutable.ArrayBuilder.make[Long]
-    val valB = scala.collection.mutable.ArrayBuilder.make[Double]
-    var kept = 0L
-    var posBase = part.posStart
-    var remaining = part.posCount
-    var eof = false
-    while (remaining > 0 && !eof) {
-      val wantPts = math.min(remaining, chunkPts.toLong).toInt
-      val want = wantPts * WhisperCodec.PointSize
-      val got =
-        try WhisperCodec.readFully(gin, buf, want)
-        catch { case _: java.io.EOFException => 0 } // truncated: keep what we read
-      val n = got / WhisperCodec.PointSize
-      WhisperCodec.foreachPoint(buf, 0, n, posBase) { (pos, ts, v) =>
-        val keep = (!options.dropTimeZero || ts != 0L) &&
-          preds.forall(_.eval(part.filePath, part.archiveIndex, pos, ts, v))
-        if (keep) {
-          if (kept == Int.MaxValue - 8)
-            throw new IllegalStateException(
-              s"gzip archive too large: >${Int.MaxValue - 8} rows survive filtering in " +
-                s"${part.filePath} archive ${part.archiveIndex}; gzip is non-splittable — " +
-                "re-compress as plain .wsp to enable ranged splits")
-          if (enforceWindows) checkWindow(part, pos, ts)
-          posB += pos; tsB += ts; valB += v
-          kept += 1
-        }
-      }
-      posBase += n
-      remaining -= n
-      if (got < want) eof = true
-    }
-    val timestamps = tsB.result()
-    Decoded(posB.result(), timestamps, valB.result(),
-      buildOrder(options, timestamps, kept.toInt), kept.toInt)
-  }
-
-  /** Identity order, or the ring rotation when timeSort is on. A well-formed
-   * ring's filled slots form at most 2 ascending runs; >1 descent falls back
-   * to a real sort. */
-  private def buildOrder(options: WhisperOptions, timestamps: Array[Long], nRows: Int): Array[Int] = {
-    val ord = Array.tabulate(nRows)(identity)
-    if (!options.timeSort || nRows <= 1) return ord
-    var drops = 0
-    var dropAt = 0
-    var i = 1
-    while (i < nRows && drops <= 1) {
-      if (timestamps(i) < timestamps(i - 1)) { drops += 1; dropAt = i }
-      i += 1
-    }
-    if (drops == 0) ord
-    else if (drops == 1) {
-      val out = new Array[Int](nRows)
-      var k = 0
-      var j = dropAt
-      while (j < nRows) { out(k) = j; k += 1; j += 1 }
-      j = 0
-      while (j < dropAt) { out(k) = j; k += 1; j += 1 }
-      var ok = true
-      k = 1
-      while (k < nRows && ok) {
-        if (timestamps(out(k)) < timestamps(out(k - 1))) ok = false
-        k += 1
-      }
-      if (ok) out else sortedOrder(timestamps, nRows)
-    } else sortedOrder(timestamps, nRows)
-  }
-
-  private def sortedOrder(timestamps: Array[Long], nRows: Int): Array[Int] = {
-    val boxed: Array[Integer] = Array.tabulate[Integer](nRows)(i => Integer.valueOf(i))
-    java.util.Arrays.sort(
-      boxed,
-      (a: Integer, b: Integer) => java.lang.Long.compare(timestamps(a), timestamps(b))
-    )
-    boxed.map(_.intValue())
-  }
-}
-
-/** Columnar reader: emits ColumnarBatches of up to `BatchSize` rows. */
+/** Columnar reader: emits ColumnarBatches of up to 4096 rows, each
+ * column filled by one primitive loop straight from the decode kernel's
+ * buffer. `file` and `archive` are constant over a partition: set once. */
 class WhisperColumnarReader(
     part: WhisperInputPartition,
     options: WhisperOptions,
@@ -903,48 +719,43 @@ class WhisperColumnarReader(
     requiredSchema: StructType,
     enforceWindows: Boolean = false
 ) extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
+  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-  private val BatchSize = 4096
   private val d = WhisperDecode.load(part, options, preds, enforceWindows)
-  private val fileBytes = part.filePath.getBytes("UTF-8")
+  // a small archive's vectors are only its size
+  private val batchRows = math.max(1, math.min(4096, d.nRows))
   private var offset = 0
-  private val vectors = OnHeapColumnVector.allocateColumns(BatchSize, requiredSchema)
-  private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
+  private val vectors: Array[ColumnVector] = requiredSchema.fields.map { f =>
+    lazy val c = new ConstantColumnVector(batchRows, f.dataType)
+    f.name match {
+      case "file"    => c.setUtf8String(UTF8String.fromString(part.filePath)); c
+      case "archive" => c.setInt(part.archiveIndex); c
+      case _         => new OnHeapColumnVector(batchRows, f.dataType)
+    }
+  }
+  private val batch = new ColumnarBatch(vectors)
 
   override def next(): Boolean = {
     if (offset >= d.nRows) return false
-    val n = math.min(BatchSize, d.nRows - offset)
+    val n = math.min(batchRows, d.nRows - offset)
     var f = 0
-    while (f < requiredSchema.length) {
-      val v = vectors(f)
-      v.reset()
-      requiredSchema.fields(f).name match {
-        case "file" =>
+    while (f < vectors.length) {
+      vectors(f) match {
+        case v: OnHeapColumnVector =>
+          v.reset()
           var i = 0
-          while (i < n) { v.putByteArray(i, fileBytes); i += 1 }
-        case "archive" =>
-          v.putInts(0, n, part.archiveIndex)
-        case "position" =>
-          var i = 0
-          while (i < n) { v.putLong(i, d.positions(d.order(offset + i))); i += 1 }
-        case "timestamp" =>
-          if (options.toDatetime) {
-            var i = 0
-            while (i < n) { v.putLong(i, d.timestamps(d.order(offset + i)) * 1000000L); i += 1 }
-          } else {
-            var i = 0
-            while (i < n) { v.putInt(i, d.timestamps(d.order(offset + i)).toInt); i += 1 }
+          requiredSchema.fields(f).name match {
+            case "position" =>
+              while (i < n) { v.putLong(i, d.position(offset + i)); i += 1 }
+            case "timestamp" =>
+              if (options.toDatetime) while (i < n) { v.putLong(i, d.timestamp(offset + i) * 1000000L); i += 1 }
+              else while (i < n) { v.putInt(i, d.timestamp(offset + i).toInt); i += 1 }
+            case "value" =>
+              if (options.dtype == "float") while (i < n) { v.putFloat(i, d.value(offset + i).toFloat); i += 1 }
+              else while (i < n) { v.putDouble(i, d.value(offset + i)); i += 1 }
           }
-        case "value" =>
-          if (options.dtype == "float") {
-            var i = 0
-            while (i < n) { v.putFloat(i, d.values(d.order(offset + i)).toFloat); i += 1 }
-          } else {
-            var i = 0
-            while (i < n) { v.putDouble(i, d.values(d.order(offset + i))); i += 1 }
-          }
+        case _ => // constant
       }
       f += 1
     }
@@ -957,14 +768,8 @@ class WhisperColumnarReader(
   override def close(): Unit = batch.close()
 }
 
-/**
- * Executor-side reader for one (file, archive[, chunk]).
- *
- * Decodes the 12-byte big-endian records (`whisper_pandas.py:31,178-184`),
- * applies dropTimeZero (`:214-215`) and pushed predicates during decode, then
- * restores chronological order by ring rotation (vs the reference's full sort,
- * `:231-232`). Truncated files stop cleanly at EOF (`test_whisper_pandas.py:100-103`).
- */
+/** Row form of [[WhisperColumnarReader]], for the streaming tail and
+ * `vectorized=false`: the same batches, one row at a time. */
 class WhisperPartitionReader(
     part: WhisperInputPartition,
     options: WhisperOptions,
@@ -972,49 +777,20 @@ class WhisperPartitionReader(
     requiredSchema: StructType,
     enforceWindows: Boolean = false
 ) extends PartitionReader[InternalRow] {
-
-  private val d = WhisperDecode.load(part, options, preds, enforceWindows)
-  private var rowIdx = -1
-
-  private val fieldWriters: Array[(GenericInternalRow, Int, Int) => Unit] =
-    requiredSchema.fields.map { f =>
-      f.name match {
-        case "file" =>
-          val u = UTF8String.fromString(part.filePath)
-          (row: GenericInternalRow, out: Int, i: Int) => row.update(out, u)
-        case "archive" =>
-          (row: GenericInternalRow, out: Int, i: Int) => row.setInt(out, part.archiveIndex)
-        case "position" =>
-          (row: GenericInternalRow, out: Int, i: Int) => row.setLong(out, d.positions(i))
-        case "timestamp" =>
-          if (options.toDatetime)
-            (row: GenericInternalRow, out: Int, i: Int) => row.setLong(out, d.timestamps(i) * 1000000L)
-          else
-            (row: GenericInternalRow, out: Int, i: Int) => row.setInt(out, d.timestamps(i).toInt)
-        case "value" =>
-          if (options.dtype == "float")
-            (row: GenericInternalRow, out: Int, i: Int) => row.setFloat(out, d.values(i).toFloat)
-          else
-            (row: GenericInternalRow, out: Int, i: Int) => row.setDouble(out, d.values(i))
-      }
-    }
-
-  private val row = new GenericInternalRow(requiredSchema.length)
+  private val batches = new WhisperColumnarReader(part, options, preds, requiredSchema, enforceWindows)
+  private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
+  private var i = 0
 
   override def next(): Boolean = {
-    rowIdx += 1
-    rowIdx < d.nRows
-  }
-
-  override def get(): InternalRow = {
-    val i = d.order(rowIdx)
-    var f = 0
-    while (f < fieldWriters.length) {
-      fieldWriters(f)(row, f, i)
-      f += 1
+    while (batch == null || i + 1 >= batch.numRows()) {
+      if (!batches.next()) return false
+      batch = batches.get()
+      i = -1
     }
-    row
+    i += 1
+    true
   }
 
-  override def close(): Unit = {}
+  override def get(): InternalRow = batch.getRow(i)
+  override def close(): Unit = batches.close()
 }
