@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.StructType
  * timestamp watermark: each micro-batch delivers points with
  * `lastOffset < timestamp <= latestOffset`, where `latestOffset` advances to
  * the driver clock at each trigger (the same model as Graphite's own
- * write-behind: a slot for time T is final once T has passed). The time-range
- * predicate is pushed into the same partition reader the batch scan uses, so
- * a micro-batch reads only the ring-buffer slots in its window — not the file.
+ * write-behind: a slot for time T is final once T has passed). The stream
+ * reads through the batch scan's [[WhisperReaderFactory]], which adds each
+ * micro-batch's time window to the pushed predicates, so a micro-batch reads
+ * only the ring-buffer slots in its window — not the file.
  *
  * The reference has no streaming surface at all (`whisper_pandas.ipynb:1382`
  * leaves write/update as a TODO); this is the Spark-native extension of its
@@ -98,9 +99,9 @@ class WhisperMicroBatchStream(
     new java.util.concurrent.ConcurrentHashMap[(String, Long), graft.format.WhisperCodec.FileMeta]()
 
   /** Memoized plan for the CURRENT batch window. Spark re-evaluates
-   * MicroBatchScanExec.inputPartitions several times per trigger (physical
-   * planning probes supportsColumnar on one exec instance, execution runs
-   * on another, progress reporting on a third — each a fresh lazy val), and
+   * MicroBatchScanExec.inputPartitions several times per trigger (execution
+   * runs on one exec instance, progress reporting on another — each a fresh
+   * lazy val), and
    * every evaluation re-ran the full directory walk: measured 3-5 globs of
    * a 100k-file tree PER TRIGGER (BENCH_NOTES r11). The same (start, end)
    * offsets must describe the same batch — replay determinism the offset
@@ -126,7 +127,7 @@ class WhisperMicroBatchStream(
    * still rebuild. Invalidation: any add/drop/re-layout changes the
    * (path, len) sequence; a revalidation divergence clears this alongside
    * the header cache (stale metas are baked into the cached units). */
-  @volatile private var basePlan: (Seq[WhisperIO.FileEntry], Array[InputPartition]) = null
+  @volatile private var basePlan: (Seq[WhisperIO.FileEntry], Array[Array[WhisperInputPartition]]) = null
 
   private def sameFiles(a: Seq[WhisperIO.FileEntry], b: Seq[WhisperIO.FileEntry]): Boolean =
     (a eq b) || (a.length == b.length && {
@@ -245,7 +246,7 @@ class WhisperMicroBatchStream(
     // base-plan memo when the (path, len) list is unchanged — the
     // steady-state trigger then pays listing + the O(n) compare + the
     // O(bins) window stamping below, not the O(n) rebuild
-    val packed = {
+    val bins = {
       val hit = basePlan
       if (hit != null && sameFiles(hit._1, live)) hit._2
       else {
@@ -262,47 +263,26 @@ class WhisperMicroBatchStream(
             }
           })
           .map(_.asInstanceOf[WhisperInputPartition])
-        val p = WhisperPlanning.binPack(units, options)
-        basePlan = (live, p)
-        p
+        val b = WhisperPlanning.binPack(units, options).map {
+          case m: WhisperMultiPartition => m.units
+          case u: WhisperInputPartition => Array(u)
+        }
+        basePlan = (live, b)
+        b
       }
     }
-    val planned = packed.map {
-      case m: WhisperMultiPartition => WhisperStreamMultiPartition(m.units, lo, hi): InputPartition
-      case p: WhisperInputPartition => WhisperStreamPartition(p, lo, hi): InputPartition
-    }
+    val planned = bins.map(WhisperStreamPartition(_, lo, hi): InputPartition)
     lastPlan = (lo, hi, planned)
     planned
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WhisperStreamReaderFactory(options, preds, requiredSchema)
+    new WhisperReaderFactory(options, preds, requiredSchema)
 
   override def stop(): Unit = {}
 }
 
-/** A batch partition plus its micro-batch window (exclusive lo, inclusive hi). */
-final case class WhisperStreamPartition(base: WhisperInputPartition, lo: Long, hi: Long)
+/** A bin of scan units (one, when unpacked) plus its micro-batch window
+ * (exclusive lo, inclusive hi). */
+final case class WhisperStreamPartition(units: Array[WhisperInputPartition], lo: Long, hi: Long)
   extends InputPartition
-
-/** A bin of small units plus the shared micro-batch window. */
-final case class WhisperStreamMultiPartition(units: Array[WhisperInputPartition], lo: Long, hi: Long)
-  extends InputPartition
-
-/** Appends the partition's time window to the pushed predicates and reuses
- * the batch partition reader — the window prunes during decode. */
-class WhisperStreamReaderFactory(
-    options: WhisperOptions,
-    preds: Seq[WPred],
-    requiredSchema: StructType
-) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition) = partition match {
-    case p: WhisperStreamPartition =>
-      val windowPreds = Seq(NumCmp("timestamp", ">", p.lo), NumCmp("timestamp", "<=", p.hi))
-      new WhisperPartitionReader(p.base, options, preds ++ windowPreds, requiredSchema)
-    case m: WhisperStreamMultiPartition =>
-      val windowPreds = Seq(NumCmp("timestamp", ">", m.lo), NumCmp("timestamp", "<=", m.hi))
-      new WhisperSequentialReader[org.apache.spark.sql.catalyst.InternalRow](
-        m.units, u => new WhisperPartitionReader(u, options, preds ++ windowPreds, requiredSchema))
-  }
-}

@@ -39,7 +39,6 @@ final case class WhisperOptions(
     dtype: String,
     compression: String,
     maxPointsPerSplit: Long,
-    vectorized: Boolean,
     streamStartTimestamp: Long,
     streamNowOverride: Long,
     binThreshold: Int = 128,
@@ -222,6 +221,7 @@ final case class WhisperOptions(
 }
 
 object WhisperOptions {
+  /** Keys not read here are ignored, `vectorized` among them: reads are always columnar. */
   def apply(map: CaseInsensitiveStringMap): WhisperOptions = WhisperOptions(
     dropTimeZero = map.getBoolean("dropTimeZero", true),
     toDatetime = map.getBoolean("toDatetime", true),
@@ -229,7 +229,6 @@ object WhisperOptions {
     dtype = map.getOrDefault("dtype", "double").toLowerCase,
     compression = map.getOrDefault("compression", "infer").toLowerCase,
     maxPointsPerSplit = map.getLong("maxPointsPerSplit", 8L * 1000 * 1000),
-    vectorized = map.getBoolean("vectorized", true),
     // streaming only: deliver points with timestamp > this at the first batch
     streamStartTimestamp = map.getLong("streamStartTimestamp", 0L),
     // streaming only: frozen "now" for deterministic tests (-1 = wall clock)

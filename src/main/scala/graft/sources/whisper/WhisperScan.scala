@@ -3,11 +3,11 @@ package graft.sources.whisper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions => ExpressionsV2, SortDirection => SortDirectionV2, SortOrder => SortOrderV2}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.format.WhisperCodec
@@ -35,10 +35,11 @@ import graft.format.WhisperCodec
  *    well-formed ring buffer is at most 2 ascending runs
  *    (`whisper_pandas.py:231-232` does a full pandas sort instead), so the
  *    reader emits the rotation; a full per-partition sort is only a fallback;
- *  - both readers share one decode kernel ([[WhisperDecode]]): one primitive
- *    pass over the read buffer, no per-point callback or row copy; the
- *    columnar reader fills its vectors straight from the buffer and the row
- *    reader (the streaming tail) is a row view of the same batches.
+ *  - one reader, [[WhisperColumnarReader]], serves batch scans and the
+ *    streaming tail: one primitive pass of the decode kernel
+ *    ([[WhisperDecode]]) over the read buffer, column vectors filled
+ *    straight from it; Spark's ColumnarToRow + whole-stage codegen consume
+ *    the batches.
  */
 final case class WhisperInputPartition(
     filePath: String,
@@ -228,6 +229,9 @@ class WhisperScan(
 
   override def readSchema(): StructType = requiredSchema
   override def toBatch: Batch = this
+  /** Every plan over this scan is columnar, the streaming tail's and an
+   * empty scan's included: there is no row reader. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
 
   /** Streaming tail: timestamp-watermark offsets (see [[WhisperMicroBatchStream]]). */
   override def toMicroBatchStream(checkpointLocation: String) =
@@ -468,8 +472,7 @@ private[whisper] object WhisperPlanning {
       // into one task on a 32-core box while a million files still bound
       // the partition count at O(totalBytes / maxSplit).
       val parallelism =
-        try org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
-        catch { case _: Throwable => 8 }
+        org.apache.spark.sql.SparkSession.getActiveSession.fold(8)(_.sparkContext.defaultParallelism)
       val totalCost = units.map(u => math.max(u.posCount, openCost)).sum
       val capacity = math.max(
         2L * openCost,
@@ -658,38 +661,39 @@ class WhisperReaderFactory(
     requiredSchema: StructType,
     enforceWindows: Boolean = false)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case m: WhisperMultiPartition =>
-        new WhisperSequentialReader[InternalRow](
-          m.units, u => new WhisperPartitionReader(u, options, preds, requiredSchema, enforceWindows))
-      case p: WhisperInputPartition =>
-        new WhisperPartitionReader(p, options, preds, requiredSchema, enforceWindows)
-    }
+  override def createReader(partition: InputPartition): Nothing =
+    throw new UnsupportedOperationException(
+      "WhisperReaderFactory.createReader cannot be reached: whisper scans are always columnar")
 
   /** Columnar reads: decode straight into column vectors — no per-row
    * InternalRow materialization; Spark's ColumnarToRow + whole-stage codegen
    * consume the batch in a tight loop (same fast path as parquet). */
-  override def supportColumnarReads(partition: InputPartition): Boolean = options.vectorized
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+  /** A streaming partition reads its units with its micro-batch window
+   * (exclusive lo, inclusive hi) added to the pushed predicates, so the
+   * window prunes during decode. */
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     partition match {
       case m: WhisperMultiPartition =>
-        new WhisperSequentialReader[org.apache.spark.sql.vectorized.ColumnarBatch](
-          m.units, u => new WhisperColumnarReader(u, options, preds, requiredSchema, enforceWindows))
+        new WhisperSequentialReader(
+          m.units, new WhisperColumnarReader(_, options, preds, requiredSchema, enforceWindows))
       case p: WhisperInputPartition =>
         new WhisperColumnarReader(p, options, preds, requiredSchema, enforceWindows)
+      case s: WhisperStreamPartition =>
+        val window = preds ++ Seq(NumCmp("timestamp", ">", s.lo), NumCmp("timestamp", "<=", s.hi))
+        new WhisperSequentialReader(s.units, new WhisperColumnarReader(_, options, window, requiredSchema))
     }
 }
 
 /** Drains one inner reader per unit, in order; a unit's reader is built
  * lazily so at most one unit's decode buffer is live at a time. */
-class WhisperSequentialReader[T](
+class WhisperSequentialReader(
     units: Array[WhisperInputPartition],
-    mk: WhisperInputPartition => PartitionReader[T]
-) extends PartitionReader[T] {
+    mk: WhisperInputPartition => PartitionReader[ColumnarBatch]
+) extends PartitionReader[ColumnarBatch] {
   private val it = units.iterator
-  private var cur: PartitionReader[T] = _
+  private var cur: PartitionReader[ColumnarBatch] = _
 
   override def next(): Boolean = {
     while (true) {
@@ -704,7 +708,7 @@ class WhisperSequentialReader[T](
     false // unreachable
   }
 
-  override def get(): T = cur.get()
+  override def get(): ColumnarBatch = cur.get()
 
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
@@ -718,9 +722,9 @@ class WhisperColumnarReader(
     preds: Seq[WPred],
     requiredSchema: StructType,
     enforceWindows: Boolean = false
-) extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+) extends PartitionReader[ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
+  import org.apache.spark.sql.vectorized.ColumnVector
 
   private val d = WhisperDecode.load(part, options, preds, enforceWindows)
   // a small archive's vectors are only its size
@@ -766,31 +770,4 @@ class WhisperColumnarReader(
 
   override def get(): ColumnarBatch = batch
   override def close(): Unit = batch.close()
-}
-
-/** Row form of [[WhisperColumnarReader]], for the streaming tail and
- * `vectorized=false`: the same batches, one row at a time. */
-class WhisperPartitionReader(
-    part: WhisperInputPartition,
-    options: WhisperOptions,
-    preds: Seq[WPred],
-    requiredSchema: StructType,
-    enforceWindows: Boolean = false
-) extends PartitionReader[InternalRow] {
-  private val batches = new WhisperColumnarReader(part, options, preds, requiredSchema, enforceWindows)
-  private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
-  private var i = 0
-
-  override def next(): Boolean = {
-    while (batch == null || i + 1 >= batch.numRows()) {
-      if (!batches.next()) return false
-      batch = batches.get()
-      i = -1
-    }
-    i += 1
-    true
-  }
-
-  override def get(): InternalRow = batch.getRow(i)
-  override def close(): Unit = batches.close()
 }

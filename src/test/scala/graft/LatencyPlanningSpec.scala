@@ -354,7 +354,7 @@ class LatencyPlanningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val opts = WhisperOptions(new CaseInsensitiveStringMap(m))
     val st = new WhisperMicroBatchStream(Seq(tree.toString), opts, Seq.empty, opts.schema, 0L)
     def bases(ps: Array[org.apache.spark.sql.connector.read.InputPartition]) =
-      ps.collect { case p: WhisperStreamPartition => p.base }
+      ps.collect { case p: WhisperStreamPartition => p.units }.flatten
     val p1 = bases(st.planInputPartitions(WhisperOffset(0L), WhisperOffset(1700000000L)))
     val p2 = bases(st.planInputPartitions(WhisperOffset(1700000000L), WhisperOffset(1800000000L)))
     assert(p1.length == 6 && p2.length == 6)

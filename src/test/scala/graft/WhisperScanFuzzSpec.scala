@@ -80,7 +80,7 @@ class WhisperScanFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       timeSort = rnd.nextBoolean(),
       toDatetime = rnd.nextBoolean(),
       dtype = if (rnd.nextBoolean()) "double" else "float",
-      vectorized = rnd.nextBoolean(),
+      vectorized = rnd.nextBoolean(), // ignored by the reader; drawn to keep the seeded config sequence
       maxPointsPerSplit = if (rnd.nextBoolean()) 1L << 23 else 64L + rnd.nextInt(512)
     )
   }

@@ -205,7 +205,7 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = unbinned.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
     assert(a == b)
     assert(binned.count() == 200L * 120)
-    // row (non-vectorized) multi-unit path
+    // vectorized=false is accepted and ignored on the multi-unit path too
     assert(read(s"$many/*.wsp", Map("vectorized" -> "false")).count() == 200L * 120)
     // pushdown evaluates identically inside a bin
     val cut = to_timestamp(lit("2020-09-13 12:30:00"))
@@ -242,11 +242,11 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
 
-  test("vectorized and row-based reads produce identical results") {
+  test("vectorized=false is an accepted no-op") {
     val vec = read(mini.toString).collect().map(_.toString).sorted
-    val row = read(mini.toString, Map("vectorized" -> "false")).collect().map(_.toString).sorted
-    assert(vec.sameElements(row))
-    val plan = read(mini.toString).queryExecution.executedPlan.toString
+    val off = read(mini.toString, Map("vectorized" -> "false"))
+    assert(vec.sameElements(off.collect().map(_.toString).sorted))
+    val plan = off.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), s"expected columnar path in:\n$plan")
   }
 
@@ -386,19 +386,38 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
             ArchiveSpec(10, 120, filled = 120, lastTimestamp = 1600000000L + i * 10, rotation = 3))))
       }
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("wsp-bin-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("wsp-bin-out").toString
-    val q = spark.readStream.format("whisper")
-      .option("streamNowOverride", 1600010000L)
-      .load(s"$many/*.wsp")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val out = spark.read.parquet(outDir)
+    val now = 1600010000L
+    val cols = Seq("file", "archive", "position", "timestamp", "value")
+    // the batch read of the same tree over the stream's window (0, now]
+    val batch = read(s"$many/*.wsp")
+      .filter(col("timestamp") > timestamp_seconds(lit(0L)) && col("timestamp") <= timestamp_seconds(lit(now)))
+      .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    def tail(opts: Map[String, String]) = {
+      val ckpt = java.nio.file.Files.createTempDirectory("wsp-bin-ckpt").toString
+      val outDir = java.nio.file.Files.createTempDirectory("wsp-bin-out").toString
+      val q = spark.readStream.format("whisper")
+        .option("streamNowOverride", now)
+        .options(opts)
+        .load(s"$many/*.wsp")
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      // the tail reads through the one (columnar) reader
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow"), s"expected a columnar streaming scan in:\n$plan")
+      spark.read.parquet(outDir)
+    }
+    val out = tail(Map.empty)
     assert(out.count() == 200L * 120)
     assert(out.select("file").distinct().count() == 200L)
+    // bin-packed partitions, then one unit per partition: both deliver
+    // exactly the batch read's rows, all five columns
+    assert(out.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq == batch)
+    val single = tail(Map("binThreshold" -> "1000000"))
+    assert(single.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq == batch)
   }
 
   test("micro-batch stream picks up files appearing after stream start") {
@@ -462,7 +481,7 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       new WhisperMicroBatchStream(Seq(tree.toString + "/*.wsp"), opts, Seq.empty, opts.schema, 0L)
     }
     def plannedSpp(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Set[Long] =
-      parts.collect { case p: WhisperStreamPartition => p.base.secondsPerPoint }.toSet
+      parts.collect { case p: WhisperStreamPartition => p.units.map(_.secondsPerPoint) }.flatten.toSet
     val tree = Files.createTempDirectory("whisper-revalidate")
     for (i <- 0 until 6)
       WhisperWriter.writeFile(tree.resolve(s"m$i.wsp"), FileSpec(archives = Seq(
@@ -735,7 +754,7 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming tail under manifestListing: manifest-served plan, reconcile staleness, mtime degrade (r15)") {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import graft.sources.whisper.{WhisperManifest, WhisperStreamMultiPartition}
+    import graft.sources.whisper.WhisperManifest
     val tree = Files.createTempDirectory("whisper-stream-manifest")
     val spec = FileSpec(archives = Seq(
       ArchiveSpec(10, 100, filled = 50, lastTimestamp = 1600000000L, rotation = 0)))
@@ -753,8 +772,7 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       new WhisperMicroBatchStream(Seq(tree.toString), opts, Seq.empty, opts.schema, 0L)
         .planInputPartitions(WhisperOffset(1600000000L), WhisperOffset(1600010000L))
         .toSeq.flatMap {
-          case p: WhisperStreamPartition => Seq(p.base.filePath)
-          case p: WhisperStreamMultiPartition => p.units.toSeq.map(_.filePath)
+          case p: WhisperStreamPartition => p.units.toSeq.map(_.filePath)
           case other => sys.error(s"unexpected partition $other")
         }.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
     }
@@ -814,7 +832,7 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sharded manifest: entries tile exactly; sharded streams plan disjoint covers (r15)") {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    import graft.sources.whisper.{WhisperManifest, WhisperStreamMultiPartition}
+    import graft.sources.whisper.WhisperManifest
     val tree = Files.createTempDirectory("whisper-manifest-shards")
     val spec = FileSpec(archives = Seq(
       ArchiveSpec(10, 100, filled = 50, lastTimestamp = 1600000000L, rotation = 0)))
@@ -850,8 +868,7 @@ class WhisperSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       new WhisperMicroBatchStream(Seq(tree.toString), opts, Seq.empty, opts.schema, 0L)
         .planInputPartitions(WhisperOffset(1600000000L), WhisperOffset(1600010000L))
         .toSeq.flatMap {
-          case p: WhisperStreamPartition => Seq(p.base.filePath)
-          case p: WhisperStreamMultiPartition => p.units.toSeq.map(_.filePath)
+          case p: WhisperStreamPartition => p.units.toSeq.map(_.filePath)
           case other => sys.error(s"unexpected partition $other")
         }.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
     }

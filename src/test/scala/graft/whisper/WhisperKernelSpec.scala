@@ -14,14 +14,14 @@ import graft.format.WhisperWriter.{ArchiveSpec, FileSpec}
 
 /**
  * The decode kernel against a naive decode: for every partition, option
- * set and pushed predicate, the columnar reader and the row reader must
+ * set and pushed predicate, the columnar reader (the only reader) must
  * emit the SAME ROW SEQUENCE (emission order, not just the multiset) as
  * `WhisperCodec.decodePoints` + filter + a stable sort by timestamp. The
  * fixtures cover rotated rings and rings with zero gaps, out-of-era residue
  * with several descents (the sort fallback), equal-timestamp ties (also
  * across the rotation seam), truncation in the middle of a point, plain and
  * gzip files, and byte-range chunks. Lives in the whisper package for the
- * readers' partition types; no Spark session.
+ * reader's partition types; no Spark session.
  */
 class WhisperKernelSpec extends AnyFunSuite {
 
@@ -145,22 +145,6 @@ class WhisperKernelSpec extends AnyFunSuite {
     out.result()
   }
 
-  private def rowwise(u: WhisperInputPartition, o: WhisperOptions, preds: Seq[WPred], enforce: Boolean = false): Seq[Row] = {
-    val r = new WhisperPartitionReader(u, o, preds, o.schema, enforce)
-    val out = Seq.newBuilder[Row]
-    try {
-      while (r.next()) {
-        val x = r.get()
-        out += ((
-          x.getUTF8String(0).toString, x.getInt(1), x.getLong(2),
-          if (o.toDatetime) x.getLong(3) else x.getInt(3).toLong,
-          if (o.dtype == "float") java.lang.Float.floatToIntBits(x.getFloat(4)).toLong
-          else java.lang.Double.doubleToLongBits(x.getDouble(4))))
-      }
-    } finally r.close()
-    out.result()
-  }
-
   /** Every operator on timestamp and position, IN on both, and the
    * per-partition archive and file predicates, with cuts drawn from the data. */
   private def predicateSets(bytes: Array[Byte], path: String): Seq[Seq[WPred]] = {
@@ -183,7 +167,7 @@ class WhisperKernelSpec extends AnyFunSuite {
         Seq(FileIn(Set("/elsewhere.wsp"))))
   }
 
-  test("columnar and row readers emit the naive decode's row sequence") {
+  test("the columnar reader emits the naive decode's row sequence") {
     for {
       (name, path, bytes, gz) <- files
       preds <- predicateSets(bytes, path)
@@ -192,8 +176,7 @@ class WhisperKernelSpec extends AnyFunSuite {
     } {
       val want = naive(bytes, u, o, preds)
       val ctx = s"$name [${u.posStart}, +${u.posCount}) $o preds=$preds"
-      assert(columnar(u, o, preds) == want, s"columnar: $ctx")
-      assert(rowwise(u, o, preds) == want, s"row: $ctx")
+      assert(columnar(u, o, preds) == want, ctx)
     }
   }
 
@@ -208,7 +191,7 @@ class WhisperKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("window enforcement throws the same IllegalStateException from both readers") {
+  test("window enforcement throws an IllegalStateException naming the planned window") {
     val (_, path, bytes, _) = files.find(_._1 == "residue").get
     val o = options(drop = true, sort = true, dt = true, dtype = "double")
     // slots [0, 100) hold the newest run, ts0 + s * Spp, but slot 20 is two eras back
@@ -222,13 +205,11 @@ class WhisperKernelSpec extends AnyFunSuite {
         "archive 0. The archive holds out-of-era residue (sparsely " +
         "written ring), so its chunks cannot be emitted pre-ordered for the global-sort " +
         "elision. Retry with option orderedSplit=false to scan it as one ordered partition."
-    val e1 = intercept[IllegalStateException](columnar(u, o, Nil, enforce = true))
-    val e2 = intercept[IllegalStateException](rowwise(u, o, Nil, enforce = true))
-    assert(e1.getMessage == msg && e2.getMessage == msg)
+    val e = intercept[IllegalStateException](columnar(u, o, Nil, enforce = true))
+    assert(e.getMessage == msg)
     // the same window without the stale slot holds: rows as the naive decode
     val v = u.copy(posStart = 21L, posCount = 79L, winLo = ts0 + 21 * Spp)
     assert(columnar(v, o, Nil, enforce = true) == naive(bytes, v, o, Nil))
-    assert(rowwise(v, o, Nil, enforce = true) == naive(bytes, v, o, Nil))
   }
 
   test("allocation guard: one decode of a ~1M-slot archive allocates under 2x its bytes") {
